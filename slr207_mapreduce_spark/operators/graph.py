@@ -56,6 +56,17 @@ def _release_ids(sc, ids: set[int]) -> None:
     unpersist_rdd_ids(sc, ids)
 
 
+def _shuffle_partitions(spark) -> int:
+    """The session's ``spark.sql.shuffle.partitions`` as an int, falling
+    back to the context's default parallelism when the value is not an
+    integer (some Spark builds accept ``"auto"``) — a tuning setting must
+    not turn into a query failure."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        return spark.sparkContext.defaultParallelism
+
+
 def _pin_partitioned(df: DataFrame, key: str) -> DataFrame:
     """Persist a LOOP-INVARIANT frame hash-partitioned by ``key`` and
     materialize it (r16, guide §2.4).
@@ -68,15 +79,19 @@ def _pin_partitioned(df: DataFrame, key: str) -> DataFrame:
     explicit ``repartition(P, key)`` through ``InMemoryRelation``, so the
     per-round join streams the cached side with NO exchange and only the
     small per-round frame moves. The partition count is pinned to the
-    session's shuffle partitions so the per-round aggregation exchanges
-    line up with it. Blocks evicted under memory pressure are recomputed
-    from lineage (persist keeps it) — strictly safer than localCheckpoint,
-    whose evicted blocks are unrecoverable. Callers unpersist in their
-    ``finally``; the materializing count() keeps eager semantics."""
-    spark = df.sparkSession
-    p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    pinned = df.repartition(p, key).persist()
-    pinned.count()
+    session's shuffle partitions (see :func:`_shuffle_partitions`) so the
+    per-round aggregation exchanges line up with it. Blocks evicted under
+    memory pressure are recomputed from lineage (persist keeps it) —
+    strictly safer than localCheckpoint, whose evicted blocks are
+    unrecoverable. Callers unpersist in their
+    ``finally``; the materializing count() keeps eager semantics, and a
+    failure during it unpersists the frame before re-raising."""
+    pinned = df.repartition(_shuffle_partitions(df.sparkSession), key).persist()
+    try:
+        pinned.count()
+    except BaseException:
+        pinned.unpersist(blocking=False)
+        raise
     return pinned
 
 
@@ -102,6 +117,26 @@ def release_result(df: DataFrame) -> None:
     (the result may be a projection over the checkpointed frame).
     """
     _release_ids(df.sparkSession.sparkContext, result_checkpoint_ids(df))
+
+
+def _label_sum(df: DataFrame) -> int:
+    """Exact sum of ``df.label`` — connected_components' convergence test."""
+    s = df.agg(F.sum(F.col("label").cast("decimal(38,0)")).alias("s")).collect()[0]["s"]
+    if s is None:
+        # null sum = empty frame (trivially converged, return 0) OR a
+        # >10^38 decimal overflow, which non-ANSI Spark also reports as
+        # null — indistinguishable by value, and two consecutive
+        # overflow-nulls would read as a false fixed point. Unreachable
+        # with int64 labels (max possible sum ~2^126 < 10^38 needs more
+        # distinct nodes than int64 holds), but fail loudly rather than
+        # mis-cluster if a future label type changes that.
+        if not df.isEmpty():
+            raise ArithmeticError(
+                "label-sum overflowed decimal(38,0) — convergence "
+                "detection would be unsound; shrink label magnitudes"
+            )
+        return 0
+    return int(s)
 
 
 def connected_components(
@@ -132,48 +167,30 @@ def connected_components(
     extra exchange per round for a boolean. decimal(38,0) keeps the sum
     exact far beyond int64 (1e12 nodes x 1e12-scale ids < 1e38)."""
     sc = edges.sparkSession.sparkContext
-    # materialize once, hash-partitioned by the per-round join key (r16,
-    # guide §2.4 — see _pin_partitioned): the loop re-evaluates sym every
-    # round, and the symmetrizing union would otherwise recompute the
-    # (possibly very expensive) upstream edge pipeline twice per round;
-    # pinning the partitioning additionally deletes the per-round
-    # re-exchange of the full edge set that the checkpointed
-    # (UnknownPartitioning) form paid on every iteration.
-    sym = _pin_partitioned(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct(),
-        "a",
-    )
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    def _label_sum(df) -> int:
-        s = df.agg(F.sum(F.col("label").cast("decimal(38,0)")).alias("s")).collect()[
-            0
-        ]["s"]
-        if s is None:
-            # null sum = empty frame (trivially converged, return 0) OR a
-            # >10^38 decimal overflow, which non-ANSI Spark also reports as
-            # null — indistinguishable by value, and two consecutive
-            # overflow-nulls would read as a false fixed point. Unreachable
-            # with int64 labels (max possible sum ~2^126 < 10^38 needs more
-            # distinct nodes than int64 holds), but fail loudly rather than
-            # mis-cluster if a future label type changes that.
-            if not df.isEmpty():
-                raise ArithmeticError(
-                    "label-sum overflowed decimal(38,0) — convergence "
-                    "detection would be unsound; shrink label magnitudes"
-                )
-            return 0
-        return int(s)
-
-    prev_sum = _label_sum(labels)
+    sym = None
     prev_ids: set[int] = set()
     converged = False
     try:
+        # materialize once, hash-partitioned by the per-round join key
+        # (r16, guide §2.4 — see _pin_partitioned): the loop re-evaluates
+        # sym every round, and the symmetrizing union would otherwise
+        # recompute the (possibly very expensive) upstream edge pipeline
+        # twice per round; pinning the partitioning additionally deletes
+        # the per-round re-exchange of the full edge set that the
+        # checkpointed (UnknownPartitioning) form paid on every iteration.
+        # Pinned inside the try so a setup failure still unpersists it.
+        sym = _pin_partitioned(
+            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+            .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+            .distinct(),
+            "a",
+        )
+        labels = (
+            sym.select(F.col("a").alias("node"))
+            .distinct()
+            .withColumn("label", F.col("node"))
+        )
+        prev_sum = _label_sum(labels)
         for round_idx in range(1, max_iter + 1):
             neighbor_min = (
                 sym.join(labels, sym.a == labels.node)
@@ -213,7 +230,8 @@ def connected_components(
     finally:
         # sym is never part of the result; on error also free the last
         # round's blocks so the failure path doesn't leak for the session
-        sym.unpersist(blocking=False)
+        if sym is not None:
+            sym.unpersist(blocking=False)
         if not converged:
             _release_ids(sc, prev_ids)
     # Only the final labels frame stays pinned — it IS the result
@@ -247,37 +265,45 @@ def pagerank_fp(
 
     Returns (node, rank_fp) — rank_fp summing to ~base over all nodes.
     """
-    sym = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .persist()
-    )
-    # All three loop-invariant frames are pinned (r16, guide §2.4/§5):
-    # nodes joins into every round's rank update, graph into every round's
-    # contribution sum — unpinned, each would re-derive its distinct-union/
-    # join over the edge scan every iteration. sym is persisted too so the
-    # one-time nodes/deg/graph builds execute the upstream edge pipeline
-    # ONCE instead of three times. nodes/graph are persisted hash-
-    # partitioned on their per-round join keys (see _pin_partitioned) —
-    # the checkpointed (UnknownPartitioning) form re-exchanged the FULL
-    # edge table every round; now only the round's rank frame and the
-    # map-side-combined contribution sums move.
-    nodes = _pin_partitioned(
-        sym.select(F.col("src").alias("node"))
-        .union(sym.select(F.col("dst").alias("node")))
-        .distinct(),
-        "node",
-    )
-    n = nodes.count()
-    deg = sym.groupBy("src").agg(F.count("*").alias("deg"))
-    graph = _pin_partitioned(sym.join(deg, "src"), "src")
-    sym.unpersist(blocking=False)  # only the builds above read it
-
     sc = edges.sparkSession.sparkContext
-    teleport = (15 * base) // (100 * n)
-    ranks = nodes.withColumn("rank_fp", F.lit(base // n).cast("long"))
+    # Every pin lands in this list, inside the try, so a failure anywhere
+    # in setup (e.g. graph's materializing count) unpersists what was
+    # already pinned instead of leaking it for the session.
+    pins: list[DataFrame] = []
     prev_ids: set[int] = set()
     try:
+        sym = (
+            edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+            .distinct()
+            .persist()
+        )
+        pins.append(sym)
+        # All three loop-invariant frames are pinned (r16, guide §2.4/§5):
+        # nodes joins into every round's rank update, graph into every
+        # round's contribution sum — unpinned, each would re-derive its
+        # distinct-union/join over the edge scan every iteration. sym is
+        # persisted too so the one-time nodes/deg/graph builds execute the
+        # upstream edge pipeline ONCE instead of three times. nodes/graph
+        # are persisted hash-partitioned on their per-round join keys (see
+        # _pin_partitioned) — the checkpointed (UnknownPartitioning) form
+        # re-exchanged the FULL edge table every round; now only the
+        # round's rank frame and the map-side-combined contribution sums
+        # move.
+        nodes = _pin_partitioned(
+            sym.select(F.col("src").alias("node"))
+            .union(sym.select(F.col("dst").alias("node")))
+            .distinct(),
+            "node",
+        )
+        pins.append(nodes)
+        n = nodes.count()
+        deg = sym.groupBy("src").agg(F.count("*").alias("deg"))
+        graph = _pin_partitioned(sym.join(deg, "src"), "src")
+        pins.append(graph)
+        sym.unpersist(blocking=False)  # only the builds above read it
+
+        teleport = (15 * base) // (100 * n)
+        ranks = nodes.withColumn("rank_fp", F.lit(base // n).cast("long"))
         for _ in range(iters):
             contrib = (
                 graph.join(ranks, graph.src == ranks.node)
@@ -307,11 +333,11 @@ def pagerank_fp(
         _release_ids(sc, prev_ids)
         raise
     finally:
-        # final ranks are checkpointed → they no longer read nodes/graph
+        # final ranks are checkpointed → they no longer read sym/nodes/graph
         # blocks; only the result frame itself stays pinned (callers may
         # free it after their terminal action via release_result)
-        nodes.unpersist(blocking=False)
-        graph.unpersist(blocking=False)
+        for pinned in pins:
+            pinned.unpersist(blocking=False)
     return ranks
 
 
@@ -389,23 +415,25 @@ def bfs_distances(
     of the dedup-cluster / trade-graph use cases here.
     """
     sc = edges.sparkSession.sparkContext
-    # hash-partitioned persist, not localCheckpoint: every hop joins the
-    # frontier against sym on `a`, and the checkpointed form re-exchanged
-    # the full edge set per hop (see _pin_partitioned).
-    sym = _pin_partitioned(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct(),
-        "a",
-    )
-    settled, settled_ids = _ckpt(
-        seeds.select(F.col(node).alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("int"))
-    )
-    frontier = settled
+    sym = None
+    settled_ids: set[int] = set()
     frontier_ids: set[int] = set()
     try:
+        # hash-partitioned persist, not localCheckpoint: every hop joins the
+        # frontier against sym on `a`, and the checkpointed form
+        # re-exchanged the full edge set per hop (see _pin_partitioned).
+        sym = _pin_partitioned(
+            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+            .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+            .distinct(),
+            "a",
+        )
+        settled, settled_ids = _ckpt(
+            seeds.select(F.col(node).alias("node"))
+            .distinct()
+            .withColumn("dist", F.lit(0).cast("int"))
+        )
+        frontier = settled
         for h in range(1, max_hops + 1):
             reached = (
                 sym.join(frontier, sym.a == frontier.node)
@@ -427,7 +455,8 @@ def bfs_distances(
         _release_ids(sc, settled_ids)
         raise
     finally:
-        sym.unpersist(blocking=False)
+        if sym is not None:
+            sym.unpersist(blocking=False)
         _release_ids(sc, frontier_ids)
     # only the settled frame (the result) stays pinned; callers may free it
     # after their terminal action via release_result

@@ -31,8 +31,14 @@ BPE_ISH_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
 def tokens_ws(text_col: str = "text") -> Column:
-    """Whitespace tokens (non-empty)."""
-    return F.filter(F.split(F.col(text_col), r"\s+"), lambda t: F.length(t) > 0)
+    """Whitespace tokens (non-empty).
+
+    ``array_remove(.., '')`` rather than ``filter(.., t -> length(t) > 0)``:
+    the same array (a token has length 0 only when it is ``''``), but
+    ``array_remove`` is whole-stage codegen'd while the lambda ``filter`` is
+    interpreted per row, which cost every caller's scan stage (chunking,
+    text statistics) a per-document interpreter call."""
+    return F.array_remove(F.split(F.col(text_col), r"\s+"), "")
 
 
 def lang_hit_count(text_col: str, lang: str) -> Column:

@@ -46,7 +46,10 @@ def q_wordcount_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the chained-DataFrame form paid ~0.18 s of eager per-op analysis at
     # sf0.1 (r15 build-latency pass, guide §1) — same tokenizer regex,
     # keep-filter, aggregation and top-K as parity/wordcount.py
-    # (word_count_topk remains the library surface), identical plan.
+    # (word_count_topk remains the library surface), identical plan. The
+    # keep-filter runs once per distinct word above the final aggregate;
+    # the CASE on cnt keeps predicate pushdown from moving it back below
+    # (see parity/wordcount.py::_keep_counted).
     from slr207_mapreduce_spark.parity.wordcount import TOKEN_DELIMITERS
     from slr207_mapreduce_spark.sources.tables import table_view
 
@@ -60,8 +63,8 @@ def q_wordcount_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(f"""
         SELECT word, COUNT(1) AS cnt
         FROM (SELECT explode(split(text, '{delims}')) AS word FROM {v})
-        WHERE lower(word) RLIKE '[`-z]'
         GROUP BY word
+        HAVING CASE WHEN cnt > 0 THEN lower(word) RLIKE '[`-z]' END
         ORDER BY cnt DESC, word ASC
         LIMIT 20
     """)

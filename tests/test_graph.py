@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -71,6 +74,100 @@ def test_iterative_ops_release_round_checkpoints(spark):
 
 def _pinned_rdd_ids(sc) -> set[int]:
     return {e.getKey() for e in sc._jsc.getPersistentRDDs().entrySet().toArray()}
+
+
+def test_shuffle_partitions_falls_back_when_not_an_integer():
+    """A non-integer spark.sql.shuffle.partitions (some Spark builds accept
+    "auto") falls back to the context's default parallelism instead of
+    failing the query."""
+    from slr207_mapreduce_spark.operators.graph import _shuffle_partitions
+
+    def session(value):
+        return SimpleNamespace(
+            conf=SimpleNamespace(get=lambda key: value),
+            sparkContext=SimpleNamespace(defaultParallelism=6),
+        )
+
+    assert _shuffle_partitions(session("12")) == 12
+    assert _shuffle_partitions(session("auto")) == 6
+
+
+def test_pin_partitioned_failure_unpersists(spark):
+    """A failure in the pin's materializing count leaves nothing pinned.
+    The failed count never registers a persistent RDD, so the check is on
+    the cache entry: the same plan must not be cached afterwards."""
+    from slr207_mapreduce_spark.operators.graph import (
+        _pin_partitioned,
+        _shuffle_partitions,
+    )
+
+    bad = spark.range(8).withColumn(
+        "k", F.expr("if(id >= 0, raise_error('injected pin failure'), id)")
+    )
+    with pytest.raises(Exception, match="injected pin failure"):
+        _pin_partitioned(bad, "k")
+    same_plan = bad.repartition(_shuffle_partitions(spark), "k")
+    assert not same_plan.storageLevel.useMemory
+
+
+def test_pagerank_setup_failure_releases_pins(spark, monkeypatch):
+    """A failure while pinning pagerank_fp's loop invariants (here: the
+    second hash-partitioned pin, after sym and nodes are already pinned)
+    unpersists every frame pinned so far."""
+    from slr207_mapreduce_spark.operators import graph
+
+    real_pin = graph._pin_partitioned
+    calls = []
+
+    def pin_then_fail(df, key):
+        calls.append(key)
+        if len(calls) == 2:
+            raise RuntimeError("injected setup failure")
+        return real_pin(df, key)
+
+    monkeypatch.setattr(graph, "_pin_partitioned", pin_then_fail)
+    sc = spark.sparkContext
+    edges = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (4, 1)], ["src", "dst"])
+    before = _pinned_rdd_ids(sc)
+    with pytest.raises(RuntimeError, match="injected setup failure"):
+        graph.pagerank_fp(edges)
+    assert calls == ["node", "src"]
+    assert not (_pinned_rdd_ids(sc) - before)
+
+
+def test_connected_components_setup_failure_releases_pins(spark, monkeypatch):
+    """A failure after the edge set is pinned but before the first round
+    (here: the initial label sum) unpersists the pinned edge set."""
+    from slr207_mapreduce_spark.operators import graph
+
+    def fail(df):
+        raise RuntimeError("injected setup failure")
+
+    monkeypatch.setattr(graph, "_label_sum", fail)
+    sc = spark.sparkContext
+    edges = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], ["src", "dst"])
+    before = _pinned_rdd_ids(sc)
+    with pytest.raises(RuntimeError, match="injected setup failure"):
+        graph.connected_components(edges)
+    assert not (_pinned_rdd_ids(sc) - before)
+
+
+def test_bfs_setup_failure_releases_pins(spark, monkeypatch):
+    """A failure after the edge set is pinned but before the first hop
+    (here: checkpointing the seeds) unpersists the pinned edge set."""
+    from slr207_mapreduce_spark.operators import graph
+
+    def fail(df):
+        raise RuntimeError("injected setup failure")
+
+    monkeypatch.setattr(graph, "_ckpt", fail)
+    sc = spark.sparkContext
+    edges = spark.createDataFrame([(1, 2), (2, 3)], ["src", "dst"])
+    seeds = spark.createDataFrame([(1,)], ["node"])
+    before = _pinned_rdd_ids(sc)
+    with pytest.raises(RuntimeError, match="injected setup failure"):
+        graph.bfs_distances(edges, seeds)
+    assert not (_pinned_rdd_ids(sc) - before)
 
 
 def test_release_result_frees_final_checkpoint(spark):

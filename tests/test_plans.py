@@ -80,6 +80,56 @@ def test_no_python_udf_in_relational_hot_paths(spark):
         assert "BatchEvalPython" not in plan, f"{name} fell off the JVM path"
 
 
+def _plan_chain(df) -> list[tuple[str, str]]:
+    """(node name, one-line description) from the root of ``df``'s physical
+    plan — before AQE and codegen wrapping, so no Exchange/InputAdapter
+    nodes — down its first-child chain (the word-count plans are linear)."""
+    node = df._jdf.queryExecution().sparkPlan()
+    chain = []
+    while True:
+        chain.append((node.nodeName(), node.simpleString(100)))
+        if node.children().isEmpty():
+            return chain
+        node = node.children().head()
+
+
+@pytest.mark.parametrize("name", ["wordcount_full", "wordcount_topk"])
+def test_wordcount_keep_filter_runs_after_final_aggregate(spark, name):
+    """The keep-filter (``lower(word) RLIKE '[`-z]'``) runs once per distinct
+    word, directly above the final HashAggregate — not once per token
+    occurrence between the explode and the map-side combine."""
+    chain = _plan_chain(_specs()[name].build(spark, SF_SMOKE))
+    names = [n for n, _ in chain]
+    keep = [i for i, (n, desc) in enumerate(chain) if n == "Filter" and "RLIKE" in desc]
+    assert len(keep) == 1, chain
+    final_agg = chain[keep[0] + 1]
+    assert final_agg[0] == "HashAggregate" and "partial_" not in final_agg[1], chain
+    gen = names.index("Generate")
+    assert names[gen - 1] == "HashAggregate" and "partial_count" in chain[gen - 1][1]
+    assert "Filter" not in names[keep[0] + 1 : gen], chain
+
+
+def test_tokens_ws_is_lambda_free_and_chunking_stays_codegend(spark):
+    """tokens_ws carries no (interpreted) lambda function, and the
+    chunking query's tokenizing Project runs inside a whole-stage codegen
+    span ('*(n)' prefix in the executed plan)."""
+    from slr207_mapreduce_spark.operators.text import tokens_ws
+    from slr207_mapreduce_spark.sources.tables import load_table
+
+    docs = load_table(spark, "documents", SF_SMOKE)
+    plan = _plan(docs.select(tokens_ws("text").alias("t")), "extended")
+    assert "lambda" not in plan.lower(), plan
+
+    df = _specs()["pipeline_chunk_documents"].build(spark, SF_SMOKE)
+    assert "lambda" not in _plan(df, "extended").lower()
+    df.write.mode("overwrite").format("noop").save()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    tokenize = [l for l in final.splitlines() if "Project" in l and "split(text" in l]
+    assert tokenize, final
+    for line in tokenize:
+        assert line.lstrip(" +-:").startswith("*("), line
+
+
 def test_wholestage_codegen_covers_wordcount(spark):
     # with AQE the codegen'd final plan exists only after execution;
     # '*(id)' marks whole-stage-codegen spans in the executed plan tree

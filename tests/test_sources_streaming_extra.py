@@ -142,13 +142,27 @@ def test_foreach_batch_sink(spark, tmp_path):
     assert total == 60
 
 
-def test_textsplits_python_datasource_matches_read_text(spark):
-    """The custom Python DataSource reads the reference's split fixtures
-    with identical content to spark.read.text, plus provenance columns;
-    one input partition per split file (the reference's distribution unit)."""
+# Synthetic split files in the reference's fixture layout (split{i}.txt,
+# French lorem with accents, digits and punctuation); an empty interior
+# line and a file without a trailing newline exercise the line splitting.
+_SPLIT_FIXTURES = {
+    "split0.txt": "Lorem ipsum dolor sit amet, été à la plage.\nDeux 45 1960\n",
+    "split1.txt": "Ut enim ad minim veniam\n\nquis nostrud (exercitation) l'ullamco\n",
+    "split2.txt": "Duis aute irure° dolor; in reprehenderit!",
+}
+
+
+def test_textsplits_python_datasource_matches_read_text(spark, tmp_path):
+    """The custom Python DataSource reads split files with identical content
+    to spark.read.text, plus provenance columns; one input partition per
+    split file (the reference's distribution unit)."""
     from slr207_mapreduce_spark.sources import split_source
 
-    split_dir = "/root/reference/little_splits"
+    split_dir = str(tmp_path / "little_splits")
+    os.mkdir(split_dir)
+    for name, body in _SPLIT_FIXTURES.items():
+        with open(os.path.join(split_dir, name), "w", encoding="utf-8") as fh:
+            fh.write(body)
     split_source.register(spark)
     df = spark.read.format("textsplits").option("path", split_dir).load()
     rows = df.collect()
