@@ -94,6 +94,16 @@ SCALE_DEFAULTS: dict[str, str] = {
     # under STAGE_MATERIALIZATION). Derived from detected RAM (~20%,
     # capped at 24g) so smaller hosts don't overcommit.
     "spark.driver.memory": _default_driver_memory(),
+    # Janino-compiled classes live in an LRU cache keyed by generated
+    # source, sized by this static conf (Spark's default: 100). A session
+    # that rotates through registry queries needs more than that: measured
+    # with CodegenMetrics' compilation count at sf0.01, perfbench's 7-query
+    # query_mix compiles ~135 classes, bench.py's 12 headline queries ~180,
+    # and the full registry 2,734. At 100 entries every steady query_mix
+    # pass recompiled 57-79 classes it had compiled one pass earlier. 4096
+    # holds the whole registry with headroom; Metaspace is the price (see
+    # SCALE.md, "Generated-code cache").
+    "spark.sql.codegen.cache.maxEntries": "4096",
     # columnar shuffle/storage stay default; whole-stage codegen is on by default
 }
 
@@ -142,17 +152,23 @@ def get_session(
 def harden_session(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable subset of our defaults to an externally
     created session (e.g. the driver's). Static configs (shuffle service,
-    memory) can't change post-start and are left alone."""
-    for key in (
-        "spark.sql.session.timeZone",
-        "spark.sql.adaptive.enabled",
-        "spark.sql.adaptive.coalescePartitions.enabled",
-        "spark.sql.adaptive.skewJoin.enabled",
-        "spark.sql.execution.arrow.pyspark.enabled",
-        "spark.sql.shuffle.partitions",
-    ):
+    memory, ``spark.sql.codegen.cache.maxEntries``) can't change post-start
+    and are left alone: only ``get_session`` applies them, so a session
+    built elsewhere keeps Spark's 100-entry codegen cache."""
+    conf = {
+        key: SCALE_DEFAULTS[key]
+        for key in (
+            "spark.sql.session.timeZone",
+            "spark.sql.adaptive.enabled",
+            "spark.sql.adaptive.coalescePartitions.enabled",
+            "spark.sql.adaptive.skewJoin.enabled",
+            "spark.sql.execution.arrow.pyspark.enabled",
+        )
+    }
+    conf["spark.sql.shuffle.partitions"] = _default_shuffle_partitions()
+    for key, value in conf.items():
         try:
-            spark.conf.set(key, SCALE_DEFAULTS[key])
+            spark.conf.set(key, value)
         except Exception:
             pass  # read-only in this deployment; keep going
     return spark

@@ -114,3 +114,4 @@ def test_aba_pass_smoke():
     assert set(res["queries"]) == {"q1_pricing_summary", "wordcount_topk"}
     assert all(t > 0 for t in res["queries"].values())
     assert res["total"] >= max(res["queries"].values())
+    assert isinstance(res["codegen_compiles"], int) and res["codegen_compiles"] >= 0

@@ -1,7 +1,13 @@
 """One timed pass of the interleaved A/B/A bench comparison.
 
-Runs the given queries once warm + N timed (min) against the package tree
-rooted at --root and prints ONE JSON line. bench.py alternates invocations
+Runs the given queries once warm, then in N timed rounds (every query once
+per round, in the given order) against the package tree rooted at --root,
+and prints ONE JSON line: the min per query over the rounds, and
+``codegen_compiles``, the Janino compilations the timed rounds made.
+Timing in rounds rather than back-to-back makes each query run after the
+others, so a cost that depends on the session's shared state (a generated
+class evicted by another query's, say) shows up as it would in a real
+rotation. bench.py alternates invocations
 of THIS script between the working tree (A) and a git worktree of the
 round-start commit (B) inside the same host-minutes window — the only
 methodology that survives the measured multicore host-regime shifts
@@ -31,7 +37,7 @@ def main() -> int:
     ap.add_argument("--root", required=True, help="package tree to measure")
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
-    ap.add_argument("--timed", type=int, default=2, help="timed runs per query (min is reported)")
+    ap.add_argument("--timed", type=int, default=2, help="timed rounds over all queries (min per query is reported)")
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
@@ -57,11 +63,17 @@ def main() -> int:
         specs[name].build(spark, args.sf).write.mode("overwrite").format("noop").save()
         return time.perf_counter() - t0
 
+    compilations = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
     for name in args.queries:  # warm: JIT, parquet footers, codegen
         run(name)
+    compiles_before = compilations.getCount()
+    rounds = [
+        {name: run(name) for name in args.queries} for _ in range(max(1, args.timed))
+    ]
+    codegen_compiles = compilations.getCount() - compiles_before
     timings = {
-        name: round(min(run(name) for _ in range(max(1, args.timed))), 3)
-        for name in args.queries
+        name: round(min(r[name] for r in rounds), 3) for name in args.queries
     }
     print(
         json.dumps(
@@ -69,6 +81,7 @@ def main() -> int:
                 "root": os.path.abspath(args.root),
                 "total": round(sum(timings.values()), 3),
                 "queries": timings,
+                "codegen_compiles": codegen_compiles,
             }
         )
     )
